@@ -17,6 +17,10 @@ the views, exactly as the reference delegates execution to DataFusion
 from __future__ import annotations
 
 import enum
+import hashlib
+import os
+import re
+import tempfile
 from dataclasses import dataclass, field
 from typing import Optional, Union
 
@@ -38,6 +42,28 @@ from datafusion_catalogprovider_glue_spark.types import (
 )
 
 CATALOG_NAME = "glue"  # the reference registers itself as "glue" (demo.rs:66)
+# session-catalog database of the tables behind explicit-partition views
+PARTITIONED_TABLES_DB = "glue_spark_partitions"
+
+
+def _quote_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(value: str) -> str:
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _backing_table_name(view: str, staging: bool = False) -> str:
+    """The session-catalog table behind ``view``: a table name allows only
+    letters, digits and ``_``, so other characters become ``_`` plus a hash.
+    The staging table a registration fills before swapping it in always
+    carries a hash, so it never names another view's table."""
+    name = re.sub(r"\W", "_", view, flags=re.ASCII)
+    if staging or name != view:
+        salted = ("staging:" if staging else "") + view
+        name += "_" + hashlib.sha1(salted.encode()).hexdigest()[:10]
+    return f"{PARTITIONED_TABLES_DB}.{_quote_ident(name)}"
 
 
 def _nano_timestamp_columns(location: str) -> set[str]:
@@ -52,8 +78,6 @@ def _nano_timestamp_columns(location: str) -> set[str]:
     µs-truncated timestamps — the truncation §1.3 already accepts.
     Best-effort: any inspection failure returns the empty set and the
     plain read path proceeds (and raises its own, clearer error)."""
-    import os
-
     try:
         import pyarrow.parquet as pq
         import pyarrow.types as pat
@@ -160,7 +184,8 @@ class GlueCatalog:
             # versions must not clobber each other's views
             tbl = {**tbl, "Name": f"{tbl.get('Name', table)}__v{version_id}"}
             return self._register_glue_table(
-                tbl, options, partition_expression=partition_expression
+                tbl, options, partition_expression=partition_expression,
+                glue_name=table,
             )
         response = self.client.get_table(DatabaseName=database, Name=table)
         return self._register_glue_table(
@@ -212,8 +237,10 @@ class GlueCatalog:
     def _register_glue_table(
         self, table: dict, options: TableRegistrationOptions,
         partition_expression: Optional[str] = None,
+        glue_name: Optional[str] = None,
     ) -> TableEntry:
-        """A5 dispatch: delta vs listing (glue.rs:174-212)."""
+        """A5 dispatch: delta vs listing (glue.rs:174-212).  ``glue_name``
+        is the Glue table of a suffixed version, for GetPartitions."""
         database = table.get("DatabaseName")
         name = table.get("Name")
         if not database:
@@ -237,6 +264,7 @@ class GlueCatalog:
         return self._register_listing_table(
             database, name, table, options,
             partition_expression=partition_expression,
+            glue_name=glue_name,
         )
 
     def _register_iceberg_table(
@@ -267,17 +295,15 @@ class GlueCatalog:
         real Hudi Glue sync registers MoR tables as _ro/_rt pairs for
         exactly this reason.  Snapshot MoR reads need the record key
         and go through sources/hudi.read_hudi_mor directly."""
-        import os as _os
-
         from datafusion_catalogprovider_glue_spark.sources.hudi import (
             read_hudi,
         )
 
         location = self._table_location(database, name, table)
         params = table.get("Parameters") or {}
-        tl = _os.path.join(location, ".hoodie")
-        has_deltacommits = _os.path.isdir(tl) and any(
-            f.endswith(".deltacommit") for f in _os.listdir(tl)
+        tl = os.path.join(location, ".hoodie")
+        has_deltacommits = os.path.isdir(tl) and any(
+            f.endswith(".deltacommit") for f in os.listdir(tl)
         )
         if has_deltacommits and params.get(
             "hoodie.query.as.ro.table", ""
@@ -350,10 +376,12 @@ class GlueCatalog:
         for key, _ktype in partition_keys:
             ptype = params.get(f"projection.{key}.type")
             if ptype == "enum":
-                vals = [
+                # a stray comma adds no value, a repeated value no partition
+                vals = list(dict.fromkeys(
                     v.strip()
                     for v in params[f"projection.{key}.values"].split(",")
-                ]
+                    if v.strip()
+                ))
             elif ptype == "integer":
                 lo, hi = (
                     int(x)
@@ -453,76 +481,113 @@ class GlueCatalog:
         partitions: list[dict],
         location: str,
     ) -> TableEntry:
-        """Register a table from its EXPLICIT Glue partition list: one
-        scan per partition location with the partition Values attached
-        as literal columns cast to the declared key types (data files
-        do not contain partition columns, per the Hive convention Glue
-        inherits).  Locations may be scattered anywhere — the layout
-        Hive's ALTER TABLE ADD PARTITION ... LOCATION produces — which
-        directory discovery cannot see.
+        """Register a table from its EXPLICIT Glue partition list, whose
+        locations may be scattered anywhere (Hive's ALTER TABLE ADD
+        PARTITION ... LOCATION layout, which directory discovery cannot
+        see) and whose data files hold no partition columns.
 
-        Scale shape: the partition list is driver-side metadata (KBs
-        per 1000 partitions, exactly what the reference would hold),
-        each partition contributes one multi-file scan branch, and
-        Catalyst prunes branches whose literal partition values fail a
-        query predicate (constant folding turns the filter into
-        true/false per branch).  At very high partition counts the
-        production move is server-side pruning — pushing an expression
-        into GetPartitions — which this method's pagination loop is
-        the hook for."""
-        base_reader = self.spark.read.format(spec.format).options(**spec.options)
-        if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
-            columns = sd.get("Columns") or []
-            schema = map_glue_columns_to_spark_schema(columns)
-            if schema.fields:
-                base_reader = base_reader.schema(schema)
-        elif spec.format in ("csv", "json"):
-            base_reader = base_reader.option("inferSchema", "true")
-
-        parts = []
-        for p in partitions:
-            values = p.get("Values") or []
-            if len(values) != len(partition_keys):
+        The partitions become one EXTERNAL partitioned session-catalog
+        table per view, as Spark serves Hive and Glue metastore tables:
+        the view is one file scan, and ``WHERE key = v`` lists only the
+        matching locations (``listPartitionsByFilter``).  The table is
+        filled under a staging name and swapped in whole, so a failed
+        re-registration keeps the old view; DROP deletes no data."""
+        seen = set()
+        for p in partitions:  # validate everything before any DDL
+            values = tuple(p.get("Values") or [])
+            # Spark's partition specs refuse empty values, and a repeated
+            # spec would silently replace the earlier one's location
+            if len(values) != len(partition_keys) or "" in values or values in seen:
                 raise GlueError(
-                    f"partition of {database}.{name} has {len(values)} "
-                    f"values for {len(partition_keys)} partition keys"
+                    f"partition {list(values)} of {database}.{name} needs one "
+                    f"non-empty value for each of {len(partition_keys)} "
+                    "partition keys, and a value list no other partition has"
                 )
+            seen.add(values)
             p_loc = (p.get("StorageDescriptor") or {}).get("Location")
-            if not p_loc:
+            # a missing location is refused, not created by ADD PARTITION
+            if not p_loc or not self._location_exists(p_loc):
                 raise GlueError(
-                    f"partition {values} of {database}.{name} has no "
-                    "StorageDescriptor.Location"
+                    f"partition {list(values)} of {database}.{name} has no "
+                    f"existing StorageDescriptor.Location ({p_loc!r})"
                 )
-            df = base_reader.load(p_loc)
-            for (pk_name, pk_type), raw in zip(partition_keys, values):
-                df = df.withColumn(
-                    pk_name, F.lit(raw).cast(parse_glue_data_type(pk_type))
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        locations = [p["StorageDescriptor"]["Location"] for p in partitions]
+
+        schema = T.StructType()
+        if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
+            schema = map_glue_columns_to_spark_schema(sd.get("Columns") or [])
+        if not schema.fields:
+            reader = self.spark.read.format(spec.format).options(**spec.options)
+            if options is TableRegistrationOptions.INFER_SCHEMA_FROM_DATA and (
+                spec.format in ("csv", "json")
+            ):
+                reader = reader.option("inferSchema", "true")
+            schema = reader.load(locations).schema
+        # a data column named like a key keeps its slot (CSV maps columns
+        # by position) under a placeholder the view drops, so the
+        # partition list's value wins
+        key_names = {k.lower() for k, _ in partition_keys}
+        shadowed = {
+            f.name: f"__glue_shadowed_{i}"
+            for i, f in enumerate(schema.fields) if f.name.lower() in key_names
+        }
+        columns = T.StructType(
+            [
+                T.StructField(shadowed[f.name], f.dataType) if f.name in shadowed else f
+                for f in schema.fields
+            ]
+            + [T.StructField(k, parse_glue_data_type(t)) for k, t in partition_keys]
+        )
+
+        view = self.view_name(database, name)
+        table, staging = _backing_table_name(view), _backing_table_name(view, True)
+        opts = ", ".join(
+            f"{_sql_string(k)} = {_sql_string(v)}" for k, v in spec.options.items()
+        )
+        # its tables are EXTERNAL, so the database's directory stays empty;
+        # it sits in the temp dir, not in the working directory
+        db_dir = os.path.join(tempfile.gettempdir(), PARTITIONED_TABLES_DB)
+        self.spark.sql(
+            f"CREATE DATABASE IF NOT EXISTS {PARTITIONED_TABLES_DB} "
+            f"LOCATION {_sql_string(db_dir)}"
+        )
+        self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        self.spark.sql(
+            f"CREATE TABLE {staging} ({columns.toDDL()}) USING "
+            + _quote_ident(spec.format)
+            + (f" OPTIONS ({opts})" if opts else "")
+            + " PARTITIONED BY ("
+            + ", ".join(_quote_ident(k) for k, _ in partition_keys)
+            + f") LOCATION {_sql_string(location)}"
+        )
+        self.spark.sql(f"ALTER TABLE {staging} ADD " + " ".join(
+            "PARTITION (" + ", ".join(
+                f"{_quote_ident(k)} = {_sql_string(v)}"
+                for (k, _), v in zip(partition_keys, p["Values"])
+            ) + f") LOCATION {_sql_string(loc)}"
+            for p, loc in zip(partitions, locations)
+        ))
+        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
+        self.spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+        df = self.spark.table(table).drop(*shadowed.values())
         entry = self._finish(
-            database,
-            name,
-            out,
-            T.StructType(out.schema),
-            spec.format,
-            location,
-            dict(spec.options),
-            partition_keys,
-            False,
+            database, name, df, T.StructType(df.schema), spec.format,
+            location, dict(spec.options), partition_keys, False,
         )
         entry.partitions = [
-            {
-                "values": list(p.get("Values") or []),
-                "location": (p.get("StorageDescriptor") or {}).get(
-                    "Location"
-                ),
-            }
-            for p in partitions
+            {"values": list(p["Values"]), "location": loc}
+            for p, loc in zip(partitions, locations)
         ]
         return entry
+
+    def _location_exists(self, location: str) -> bool:
+        """Whether a partition location exists, asking a URI's Hadoop
+        file system as ADD PARTITION does (it creates missing ones)."""
+        if not re.match(r"[A-Za-z][\w+.-]*:", location):
+            return os.path.exists(location)
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(location)
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return fs.exists(path)
 
     def _load_regex_table(
         self,
@@ -589,19 +654,17 @@ class GlueCatalog:
         binary Ion is malformed either way).  Object-store locations
         skip the probe (no cheap peek): they keep the reference's
         JSON approximation."""
-        import os as _os
-
         from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
             is_ion_binary_file,
         )
 
-        if "://" in location or not _os.path.isdir(location):
+        if "://" in location or not os.path.isdir(location):
             return False
-        for n in sorted(_os.listdir(location)):
+        for n in sorted(os.listdir(location)):
             if n.startswith(("_", ".")):
                 continue
             try:
-                return is_ion_binary_file(_os.path.join(location, n))
+                return is_ion_binary_file(os.path.join(location, n))
             except OSError:
                 return False
         return False
@@ -622,8 +685,6 @@ class GlueCatalog:
         from the first file's decoded rows (string/long/double/boolean
         from the python values, the same subset the JSON sampler
         yields)."""
-        import os as _os
-
         from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
             decode_ion_binary,
             read_ion_binary,
@@ -638,8 +699,8 @@ class GlueCatalog:
             schema = map_glue_columns_to_spark_schema(columns)
         else:
             first = next(
-                _os.path.join(location, n)
-                for n in sorted(_os.listdir(location))
+                os.path.join(location, n)
+                for n in sorted(os.listdir(location))
                 if not n.startswith(("_", "."))
             )
             with open(first, "rb") as fh:
@@ -676,6 +737,7 @@ class GlueCatalog:
         table: dict,
         options: TableRegistrationOptions,
         partition_expression: Optional[str] = None,
+        glue_name: Optional[str] = None,
     ) -> TableEntry:
         """A7 (glue.rs:243-274): format dispatch + schema mode + load."""
         sd = self._storage_descriptor(database, name, table)
@@ -710,16 +772,11 @@ class GlueCatalog:
             if projected:
                 # projection enumerates the CONFIGURED value space, not
                 # what exists; Athena semantics read missing projected
-                # partitions as empty, so drop absent local locations
-                # (object-store paths pass through — existence is the
-                # scan's job there)
-                import os as _os
-
+                # partitions as empty, so drop absent locations
                 projected = [
                     p
                     for p in projected
-                    if "://" in p["StorageDescriptor"]["Location"]
-                    or _os.path.exists(p["StorageDescriptor"]["Location"])
+                    if self._location_exists(p["StorageDescriptor"]["Location"])
                 ]
             if projected:
                 return self._register_explicit_partitions(
@@ -731,7 +788,7 @@ class GlueCatalog:
             # whose locations are NOT Hive-style dirs under one root —
             # GetPartitions is the source of truth when it returns any
             explicit = self._get_partitions(
-                database, name, expression=partition_expression
+                database, glue_name or name, expression=partition_expression
             )
             if explicit:
                 return self._register_explicit_partitions(

@@ -10,7 +10,6 @@ shape), gated behind an import-try.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Optional
 
@@ -318,11 +317,6 @@ class FakeGlueClient:
                     }
                 )
         return {"ColumnStatisticsList": out, "Errors": errors}
-
-    @classmethod
-    def from_json(cls, path: str) -> "FakeGlueClient":
-        with open(path) as fh:
-            return cls(json.load(fh))
 
 
 # ---------------------------------------------------------------------------
@@ -658,16 +652,3 @@ def testdata_fixture(sf_dir: str, database: str = "default") -> FakeGlueClient:
         for name, cols in TESTDATA_GLUE_COLUMNS.items()
     }
     return FakeGlueClient({database: tables})
-
-
-def boto3_glue_client(region_name: Optional[str] = None):
-    """The real AWS path (untested live, mirroring the reference whose
-    AWS path is also CI-untested — SURVEY.md §5).  boto3 responses have
-    exactly the FakeGlueClient shape."""
-    try:
-        import boto3  # type: ignore[import-not-found]
-    except ImportError as exc:  # pragma: no cover
-        raise AwsError(
-            "boto3 is not installed; use FakeGlueClient for local catalogs"
-        ) from exc
-    return boto3.client("glue", region_name=region_name)  # pragma: no cover

@@ -900,10 +900,10 @@ def scan_glue_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories and no partition is dropped or double-counted.
 
     Scale: the partition list is driver-side metadata (same as the
-    reference's); each partition is one scan branch whose literal
-    partition value Catalyst constant-folds against query predicates
-    — partition pruning for free, with server-side GetPartitions
-    expression pushdown as the documented growth path."""
+    reference's), registered as one external session-catalog table:
+    the view is a single file scan, a partition predicate lists only
+    the matching locations, and server-side GetPartitions expression
+    pushdown is the documented growth path."""
     from pyspark.sql import functions as F
 
     from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (
@@ -3833,13 +3833,13 @@ def scan_glue_partition_projection(spark: SparkSession, sf_dir: str) -> DataFram
     layout — only projection enumeration can.  Configured-but-absent
     days must read as EMPTY (Athena semantics), not fail.
     Hash-matching a per-day rollup recomputed from the raw timestamps
-    proves every day's directory bound to the right literal and the
-    padding days contributed nothing.
+    proves every day's directory bound to the right partition value
+    and the padding days contributed nothing.
 
     Scale: projection IS the scale feature on the real service — a
     10-year daily table is 3 650 driver-side template substitutions
-    and zero catalog round-trips; each partition stays one scan branch
-    Catalyst prunes by literal."""
+    and zero catalog round-trips; the days that exist become the
+    partition list of one table, pruned through the session catalog."""
     from pyspark.sql import functions as F
 
     from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (

@@ -68,15 +68,6 @@ def _next_version(log_dir: str) -> int:
     return max(vs) + 1 if vs else 0
 
 
-def _num_records(path: str) -> int:
-    """Row count from the parquet FOOTER (no data pages touched) — the
-    per-file ``stats.numRecords`` every Delta writer records so that
-    DESCRIBE HISTORY and stats-based skipping work without scans."""
-    import pyarrow.parquet as pq
-
-    return int(pq.ParquetFile(path).metadata.num_rows)
-
-
 # stats minValues/maxValues are recorded for these parquet physical
 # types only — the ones whose footer statistics order matches Delta's
 # data-skipping semantics without truncation concerns (strings are

@@ -90,22 +90,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return ensure_micros_ts(spark.read.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
-    """Register every testdata table as a temp view ``<prefix><name>``.
-
-    Mirrors the reference's register_all flow (glue.rs:136-172): every
-    table of every database lands in the session catalog so plain SQL
-    can reach it.
-    """
-    names = []
-    for name in TABLE_NAMES:
-        view = f"{prefix}{name}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-        names.append(view)
-    return names

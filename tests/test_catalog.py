@@ -586,3 +586,251 @@ def test_rewrite_three_part_textual():
     assert f("/* multi\nline glue.a.b */ SELECT glue.a.b.c") == (
         "/* multi\nline glue.a.b */ SELECT glue__a__b.c"
     )
+
+
+# ------------------------------------------------- explicit partitions
+_PARQUET_ID_SD = parquet_table("db", "t", "", [("id", "bigint")])["StorageDescriptor"]
+
+
+def _explicit_partition_client(tmp_path, table, sd, key, parts):
+    """FakeGlueClient over ``xpdb.<table>`` whose explicit GetPartitions
+    partitions are ``[(values, location or None)]`` under an empty
+    table root."""
+    root = tmp_path / "table_root"
+    root.mkdir(exist_ok=True)
+    tbl = {
+        "DatabaseName": "xpdb",
+        "Name": table,
+        "Parameters": {},
+        "PartitionKeys": [{"Name": key, "Type": "string"}],
+        "StorageDescriptor": {**sd, "Location": str(root)},
+    }
+    partitions = [
+        {"Values": v, "StorageDescriptor": {"Location": loc} if loc else {}}
+        for v, loc in parts
+    ]
+    return FakeGlueClient(
+        {"xpdb": {table: tbl}}, partitions={("xpdb", table): partitions}
+    )
+
+
+def _per_partition_counts(spark, view, key):
+    from pyspark.sql import functions as F
+
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import _quote_ident
+
+    col = F.col(_quote_ident(key))
+    return {r[0]: r[1] for r in spark.table(view).groupBy(col).count().collect()}
+
+
+def test_explicit_partitions_reregistration_keeps_data(spark, tmp_path):
+    """Re-registering an explicit-partition table (a second catalog,
+    and a historical version beside it) drops and recreates only the
+    session-catalog tables behind the views: every data file
+    survives, and each view counts its partitions correctly."""
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import (
+        _backing_table_name,
+    )
+
+    want = {"a": 3, "b": 5}
+    parts = []
+    for seg, n in want.items():
+        loc = str(tmp_path / f"loc_{seg}")
+        spark.range(n).write.parquet(loc)
+        parts.append(([seg], loc))
+    client = _explicit_partition_client(tmp_path, "t", _PARQUET_ID_SD, "seg", parts)
+    files = sorted(p for p in tmp_path.rglob("*") if p.is_file())
+
+    current = GlueCatalog(spark, client).register_table("xpdb", "t")
+    second = GlueCatalog(spark, client)
+    version = second.register_table("xpdb", "t", version_id="1")
+    assert second.register_table("xpdb", "t").view == current.view
+    assert version.view != current.view
+
+    assert sorted(p for p in tmp_path.rglob("*") if p.is_file()) == files
+    for entry in (current, version):
+        assert _per_partition_counts(spark, entry.view, "seg") == want
+        backing = spark.catalog.getTable(_backing_table_name(entry.view))
+        assert backing.tableType == "EXTERNAL"
+    assert client.calls["GetPartitions"] == 3
+
+
+@pytest.mark.parametrize("case", ["csv_infer", "json_infer", "quoted_names"])
+def test_explicit_partitions_roundtrip(spark, tmp_path, case):
+    """Explicit-partition registration round trip: per-partition
+    counts, pruning on the key, information_schema.partitions rows and
+    the key's nullability, for inferred CSV/JSON schemas and for keys,
+    values and locations that need SQL quoting."""
+    from pyspark.sql import functions as F
+
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import _quote_ident
+    from datafusion_catalogprovider_glue_spark.infoschema import (
+        information_schema_partitions,
+    )
+
+    key, options = "seg", TableRegistrationOptions.INFER_SCHEMA_FROM_DATA
+    values = {"x": 2, "y": 3}
+    if case == "csv_infer":
+        sd = _text_sd(
+            LAZY_SIMPLE_SERDE, {"field.delim": "|"},
+            {"skip.header.line.count": "1"},
+        )
+        # the files also carry a stale copy of the key between the
+        # other columns: the partition list's value wins, and the CSV
+        # columns after it keep their positions
+        write = lambda d, n: (d / "part-0.csv").write_text(
+            "id|seg|name\n" + "".join(f"{i}|stale|n{i}\n" for i in range(n))
+        )
+    elif case == "json_infer":
+        sd = _text_sd(OPENX_JSON_SERDE)
+        write = lambda d, n: (d / "part-0.json").write_text("".join(
+            f'{{"id": {i}, "seg": "stale", "name": "n{i}"}}\n' for i in range(n)
+        ))
+    else:
+        key = "part`key x"
+        values = {"it's": 2, "back\\slash and space": 3}
+        options = TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE
+        sd = parquet_table("db", "t", "", [("id", "bigint"), ("name", "string")])[
+            "StorageDescriptor"
+        ]
+        write = lambda d, n: spark.createDataFrame(
+            [(i, f"n{i}") for i in range(n)], "id bigint, name string"
+        ).write.mode("overwrite").parquet(str(d))
+    parts = []
+    for v, n in values.items():
+        d = tmp_path / f"dir {v}"
+        d.mkdir()
+        write(d, n)
+        parts.append(([v], str(d)))
+
+    catalog = GlueCatalog(spark, _explicit_partition_client(tmp_path, "t", sd, key, parts))
+    entry = catalog.register_table("xpdb", "t", options=options)
+
+    df = spark.table(entry.view)
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        ("id", T.IntegerType() if case == "csv_infer" else T.LongType()),
+        ("name", T.StringType()),
+        (key, T.StringType()),
+    ]
+    assert _per_partition_counts(spark, entry.view, key) == values
+    assert sorted(tuple(r) for r in df.select(_quote_ident(key), "id", "name").collect()) == sorted(
+        (v, i, f"n{i}") for v, n in values.items() for i in range(n)
+    )
+    v0 = next(iter(values))
+    assert df.filter(F.col(_quote_ident(key)) == v0).count() == values[v0]
+    rows = information_schema_partitions(catalog).collect()
+    assert sorted((r.partition_values, r.location) for r in rows) == sorted(
+        (f"{key}={v}", loc) for (v,), loc in parts
+    )
+    # string keys were non-nullable literal columns before the keys
+    # came from the session catalog's partition list
+    col = information_schema_columns(catalog).filter(
+        F.col("column_name") == key
+    ).collect()
+    assert [c.is_nullable for c in col] == ["YES"]
+
+
+@pytest.mark.parametrize(
+    "bad",
+    ["value_count", "no_location", "missing_dir", "missing_uri", "empty_value",
+     "repeated"],
+)
+def test_explicit_partitions_validated_before_ddl(spark, tmp_path, bad):
+    """A malformed partition list raises GlueError before the catalog
+    creates the table behind the view (a missing directory, local or
+    a URI, is refused, not created; Spark's partition specs hold no
+    empty or repeated values)."""
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import (
+        _backing_table_name,
+    )
+    from datafusion_catalogprovider_glue_spark.errors import GlueError
+
+    good, gone = str(tmp_path / "good"), str(tmp_path / "gone")
+    spark.range(2).write.parquet(good)
+    second = {
+        "value_count": (["b", "c"], good),
+        "no_location": (["b"], None),
+        "missing_dir": (["b"], gone),
+        "missing_uri": (["b"], "file://" + gone),
+        "empty_value": ([""], good),
+        "repeated": (["a"], good),
+    }[bad]
+    client = _explicit_partition_client(
+        tmp_path, f"t_{bad}", _PARQUET_ID_SD, "seg", [(["a"], good), second]
+    )
+    catalog = GlueCatalog(spark, client)
+    with pytest.raises(GlueError):
+        catalog.register_table("xpdb", f"t_{bad}")
+    backing = _backing_table_name(catalog.view_name("xpdb", f"t_{bad}"))
+    assert not spark.catalog.tableExists(backing)
+    assert not os.path.exists(gone)
+
+
+def test_failed_reregistration_keeps_previous_view(spark, tmp_path, monkeypatch):
+    """Re-registering with a partition list that fails, in validation
+    or in the catalog's DDL, leaves the previous registration's view
+    and its counts as they were."""
+    from datafusion_catalogprovider_glue_spark.errors import GlueError
+
+    want = {"a": 2, "b": 3}
+    parts = []
+    for seg, n in want.items():
+        loc = str(tmp_path / f"loc_{seg}")
+        spark.range(n).write.parquet(loc)
+        parts.append(([seg], loc))
+    client = _explicit_partition_client(tmp_path, "t_keep", _PARQUET_ID_SD, "seg", parts)
+    view = GlueCatalog(spark, client).register_table("xpdb", "t_keep").view
+    taken = spark.table(view)
+
+    broken = _explicit_partition_client(
+        tmp_path, "t_keep", _PARQUET_ID_SD, "seg",
+        parts + [(["c"], str(tmp_path / "gone"))],
+    )
+    with pytest.raises(GlueError):
+        GlueCatalog(spark, broken).register_table("xpdb", "t_keep")
+    assert _per_partition_counts(spark, view, "seg") == want
+
+    sql = type(spark).sql
+
+    def failing_sql(self, query, *args, **kwargs):
+        if "ADD PARTITION" in query:
+            raise RuntimeError("injected ADD PARTITION failure")
+        return sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "sql", failing_sql)
+    with pytest.raises(RuntimeError, match="injected"):
+        GlueCatalog(spark, client).register_table("xpdb", "t_keep")
+    monkeypatch.undo()
+    assert _per_partition_counts(spark, view, "seg") == want
+    assert taken.count() == sum(want.values())
+
+
+def test_projection_skips_missing_uri_locations(spark, tmp_path):
+    """Partition projection over a ``file://`` template: a projected
+    location that does not exist is left out and not created, and a
+    stray comma in an enum adds no partition.  The table behind the
+    view lives outside the working directory."""
+    root = tmp_path / "proj"
+    spark.range(4).write.parquet(str(root / "seg=a"))
+    tbl = {
+        "DatabaseName": "xpdb",
+        "Name": "t_proj",
+        "Parameters": {
+            "projection.enabled": "true",
+            "projection.seg.type": "enum",
+            "projection.seg.values": "a,b,",
+            "storage.location.template": f"file://{root}/seg=${{seg}}",
+        },
+        "PartitionKeys": [{"Name": "seg", "Type": "string"}],
+        "StorageDescriptor": {**_PARQUET_ID_SD, "Location": str(root)},
+    }
+    catalog = GlueCatalog(spark, FakeGlueClient({"xpdb": {"t_proj": tbl}}))
+    entry = catalog.register_table("xpdb", "t_proj")
+    assert _per_partition_counts(spark, entry.view, "seg") == {"a": 4}
+    assert [p["values"] for p in entry.partitions] == [["a"]]
+    assert sorted(os.listdir(root)) == ["seg=a"]
+
+    db_location = dict(
+        spark.sql("DESCRIBE DATABASE glue_spark_partitions").collect()
+    )["Location"]
+    assert not db_location.startswith("file:" + os.getcwd())

@@ -137,6 +137,56 @@ def test_partitioned_scan_prunes_directories(spark):
     assert "l_year" in part_line and "1996" in part_line
 
 
+def test_glue_explicit_partitions_prune_through_catalog(spark):
+    """Explicit Glue partitions (fixtures/glue_partitions.py: one
+    scattered directory per market segment) register as ONE
+    catalog-partitioned table: a key predicate prunes through the
+    session catalog's partition list to a single FileScan over exactly
+    one location, and the unpruned read is one FileScan, not a union
+    of per-partition scans."""
+    import os
+
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import GlueCatalog
+    from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (
+        TESTDATA_GLUE_COLUMNS,
+        FakeGlueClient,
+        parquet_table,
+    )
+    from datafusion_catalogprovider_glue_spark.fixtures.glue_partitions import (
+        build_scattered_partitions,
+    )
+
+    root, parts = build_scattered_partitions(spark, SF_DIR)
+    cols = [
+        c for c in TESTDATA_GLUE_COLUMNS["customer"] if c[0] != "c_mktsegment"
+    ]
+    client = FakeGlueClient(
+        {"partdb": {"customer_scattered": parquet_table(
+            "partdb", "customer_scattered", root, cols,
+            partition_keys=[("c_mktsegment", "string")],
+        )}},
+        partitions={("partdb", "customer_scattered"): parts},
+    )
+    view = GlueCatalog(spark, client).register_table(
+        "partdb", "customer_scattered"
+    ).view
+    seg, loc = parts[0]["Values"][0], parts[0]["StorageDescriptor"]["Location"]
+
+    pruned = plan_str(
+        spark.sql(f"SELECT COUNT(*) FROM {view} WHERE c_mktsegment = '{seg}'"),
+        "simple",
+    )
+    scans = [l for l in pruned.splitlines() if "FileScan" in l]
+    assert len(scans) == 1
+    assert "PartitionFilters: [" in scans[0] and seg in scans[0]
+    assert "InMemoryFileIndex(1 paths)" in scans[0]
+    assert os.path.basename(loc) + "]" in scans[0]
+
+    unpruned = plan_str(spark.sql(f"SELECT COUNT(*) FROM {view}"), "simple")
+    assert "Union" not in unpruned
+    assert sum("FileScan" in l for l in unpruned.splitlines()) == 1
+
+
 def test_multi_file_scan_parallelism(spark, tmp_path):
     """The testdata's single-row-group files force 1-task scans (why
     _parallelize exists); confirm the property that matters at 100 TB:
